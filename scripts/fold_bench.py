@@ -32,6 +32,9 @@ store_build_sec. n_failed is derived from the folded queries map itself
 (ADVICE r13: the max-over-runs form could report failures the fold had
 already healed).
 
+A run whose record carries `"deadline_truncated": true` is rejected:
+the fold exits non-zero and writes nothing.
+
 Usage: fold_bench.py OUT.json RUN1.json RUN2.json [RUN_OR_PATCH.json ...]
 """
 import json
@@ -41,6 +44,14 @@ import sys
 def main() -> None:
     out_path, run_paths = sys.argv[1], sys.argv[2:]
     runs = [json.load(open(p)) for p in run_paths]
+    # a deadline-truncated run covers only part of the catalog; folding it
+    # (in any position: `names` comes from the first run) would commit an
+    # unmarked artifact with queries silently missing
+    truncated = [p for p, r in zip(run_paths, runs)
+                 if r.get("deadline_truncated")]
+    if truncated:
+        sys.exit(f"deadline-truncated input(s), not folded: "
+                 f"{', '.join(truncated)}")
     names = set(runs[0]["queries"])
     full, patches = [], []
     for p, r in zip(run_paths, runs):

@@ -218,7 +218,14 @@ object AdsQueries extends QueryModule {
     * `sum(when(isR, …))` reproduces the padding exactly: it is NULL
     * precisely on keys with no refund rows, where the full outer join
     * produced NULLs (never a spurious 0). The oracle keeps the
-    * full-outer SQL verbatim, so the hash gate proves the algebra. */
+    * full-outer SQL verbatim, so the hash gate proves the algebra.
+    *
+    * Assumes no grouping key is NULL. The full outer join matches on
+    * `keys` with `=`, so a NULL key never joins: the oracle would emit
+    * the NULL group twice (an order-side row with NULL refunds and a
+    * refund-side row with NULL orders), where this aggregation emits it
+    * once. The keys used here are `part` columns (`p_brand`, `p_type`,
+    * `p_size`), which the TPC-H schema declares NOT NULL. */
   private def orderVsRefund(s: SparkSession, d: String,
                             keys: Seq[String]): DataFrame = {
     val li = Tables.lineitem(s, d)

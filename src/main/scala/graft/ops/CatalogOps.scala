@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -73,6 +74,21 @@ object CatalogOps extends QueryModule {
       unix_timestamp(col("l_shipdate")).cast("double")),
   )
 
+  /** Bytes of the data files under `path`, as the scan reads them: sized
+    * through the path's Hadoop FileSystem (so remote stores report real
+    * sizes), recursing into nested partition directories and skipping the
+    * names a file scan ignores (`_SUCCESS`, `.crc`, `_temporary/`, ...).
+    * 0 when the path does not exist. */
+  private[graft] def inputBytes(s: SparkSession, path: String): Long = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(s.sessionState.newHadoopConf())
+    def hidden(p: Path) = p.getName.startsWith("_") || p.getName.startsWith(".")
+    def walk(p: Path): Long = fs.listStatus(p).iterator
+      .filterNot(st => hidden(st.getPath))
+      .map(st => if (st.isDirectory) walk(st.getPath) else st.getLen).sum
+    if (fs.exists(root)) walk(root) else 0L
+  }
+
   /** ANALYZE-style column statistics over `lineitem` in ONE scan:
     * rows / nulls / exact NDV / deterministic-KMV NDV (+ its accuracy
     * audit flag) / lexicographic min-max of the canonical encoding /
@@ -100,17 +116,9 @@ object CatalogOps extends QueryModule {
     val li = Tables.lineitem(s, d)
     val cores = s.sparkContext.defaultParallelism
     val splitBytes = s.sessionState.conf.filesMaxPartitionBytes
-    // Directory-aware size: a production-scale table is a DIRECTORY of
-    // part files (File.length() on a dir is filesystem noise, not data
-    // size) — sum the parts so the gate turns OFF exactly when the scan
-    // has enough real splits.
-    val src = new java.io.File(d, "lineitem.parquet")
-    val inputBytes =
-      if (src.isDirectory)
-        Option(src.listFiles()).map(_.map(_.length()).sum).getOrElse(0L)
-      else src.length()
+    val inBytes = inputBytes(s, s"$d/lineitem.parquet")
     val spread =
-      if (inputBytes > 0 && inputBytes < cores.toLong * splitBytes)
+      if (inBytes > 0 && inBytes < cores.toLong * splitBytes)
         li.repartition(cores)
       else li
     val grouped = spread

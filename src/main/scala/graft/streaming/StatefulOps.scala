@@ -7,16 +7,33 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateT
   * for (everything else maps to built-ins): per-day dedup counters (A5),
   * new/old visitor repair (O9), keep-latest changelog dedup (O18), the
   * CEP-equivalent bounce detector (W6), plus the training-pipeline
-  * extensions — ingest-time exact dedup and as-of attribution in two
-  * variants (O(1)-state in-order, and watermark-buffered out-of-order).
-  * All are `flatMapGroupsWithState` over typed Datasets — state lives in
-  * the state store, scales with #executors, and is checkpointable (which
-  * the reference's jobs designed but disabled, BaseLogApp.java:33-44).
+  * extensions — ingest-time exact dedup, as-of attribution in two
+  * variants (O(1)-state in-order, and watermark-buffered out-of-order),
+  * streaming heavy hitters and first/last-touch attribution.
+  *
+  * One implementation per operator, `flatMapGroupsWithState` over typed
+  * Datasets — state lives in the state store, scales with #executors, and
+  * is checkpointable (which the reference's jobs designed but disabled,
+  * BaseLogApp.java:33-44). Two `transformWithState` pieces remain, each
+  * for its own reason:
+  *   - [[sessionizeTws]] is gap sessionization's only form (event-time
+  *     timers + `handleExpiredTimer`);
+  *   - [[bounceDetectorTws]] is kept next to [[bounceDetector]] while the
+  *     fMGWS form has a known defect: a late entry page that becomes the
+  *     held page sets a timeout behind the watermark and stops the query,
+  *     where the timer form bounces it in that batch. Fixing the defect
+  *     and deleting the losing form is one change, not two.
   *
   * Scale: state is per-key and O(bytes) — a date string (A5/O9), one held
-  * row (O18/W6). Keys hash-partition across the cluster; no operator here
-  * holds unbounded state, and every one declares a timeout so the store
-  * self-cleans (the Flink originals used 1-day TTL / timers the same way).
+  * row (O18/W6), a marker bit, one long, a touch pair, an O(k) sketch.
+  * Keys hash-partition across the cluster. Only the event-time operators
+  * ([[asofBuffered]], [[keepLatest]], [[bounceDetector]]) declare a
+  * timeout that removes a key's state. The other six — [[dailyDedup]],
+  * [[ingestDedup]], [[asofAttribution]], [[visitorRepair]],
+  * [[heavyHittersStream]] and [[attributionStream]] — run with
+  * `GroupStateTimeout.NoTimeout`, so their state grows with the number of
+  * distinct keys ever seen (the Flink originals bounded the dedup markers
+  * with a 1-day state TTL; nothing here does).
   */
 object StatefulOps {
 
@@ -38,8 +55,9 @@ object StatefulOps {
   private implicit val stringEnc: Encoder[String] = Encoders.STRING
 
   /** A5 — daily-unique dedup: emit only the first event per (key, day).
-    * State = last-emitted date per key (the Flink ValueState with 1-day TTL,
-    * DwdTrafficUniqueVisitorDetail.java:69-98). */
+    * State = last-emitted date per key (the Flink ValueState,
+    * DwdTrafficUniqueVisitorDetail.java:69-98, which also carried a 1-day
+    * TTL; no timeout here, so one date per key ever seen). */
   def dailyDedup(ds: Dataset[KeyedEvent]): Dataset[KeyedEvent] =
     ds.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
@@ -53,60 +71,6 @@ object StatefulOps {
           state.update(lastDate)
           out.result().iterator
         })
-
-  /** [[dailyDedup]] on Spark 4's `transformWithState` — the A5 twin the
-    * W8 migration was missing (the reference job this operator maps is
-    * its most-reused stateful shape: `DwdTrafficUniqueVisitorDetail` plus
-    * every cart/order/pay UU window). The last-emitted date lives in a
-    * named ValueState whose TTL is DECLARED (`TTLConfig`): the Flink
-    * original hand-configured a 1-day StateTtlConfig
-    * (DwdTrafficUniqueVisitorDetail.java:76-79) precisely because the
-    * marker is worthless once its day has passed — here that contract is
-    * one config line and RocksDB compaction physically drops expired
-    * markers, so per-key state is bounded by ACTIVE keys per day, not
-    * all keys ever seen (at 100 TB of traffic the visitor-key space is
-    * the biggest state surface this module holds). Semantics with the
-    * TTL live are IDENTICAL, not merely similar: the fold's only read is
-    * "did this key already emit today?", and a marker from an earlier
-    * date always takes the `e.date != lastDate` branch whether the store
-    * expired it or still holds it — expiry can never flip an emit
-    * decision, only shrink the store. StreamingSpec pins the twin
-    * bit-equal to [[dailyDedup]] on the same slicing, including the
-    * midnight-rollover property. */
-  class DailyDedupProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[String, KeyedEvent, KeyedEvent] {
-    @transient private var lastDate: ValueState[String] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      lastDate = getHandle.getValueState[String]("lastDate",
-        Encoders.STRING, ttl)
-    override def handleInputRows(key: String, rows: Iterator[KeyedEvent],
-        tv: TimerValues): Iterator[KeyedEvent] = {
-      var last = Option(lastDate.get()).getOrElse("")
-      val out = Vector.newBuilder[KeyedEvent]
-      rows.toSeq.sortBy(_.ts).foreach { e =>
-        // dates are monotone in ts, so "changed" ⇔ "first of its day"
-        if (e.date != last) { last = e.date; out += e }
-      }
-      lastDate.update(last)
-      out.result().iterator
-    }
-  }
-
-  /** The `transformWithState` face of [[dailyDedup]]. Production sets
-    * `ttl = TTLConfig(java.time.Duration.ofDays(1))` — the declared
-    * dedup horizon; NONE keeps exact parity with the fMGWS twin for the
-    * bit-equality spec. A declared TTL forces
-    * `TimeMode.ProcessingTime()` (the engine rejects TTL under NoTime) —
-    * faithful to the Flink original, whose StateTtlConfig is
-    * processing-time OnCreateAndWrite retention too
-    * (DwdTrafficUniqueVisitorDetail.java:76-79). */
-  def dailyDedupTws(ds: Dataset[KeyedEvent],
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[KeyedEvent] =
-    ds.groupByKey(_.key)
-      .transformWithState(new DailyDedupProcessor(ttl),
-        if (ttl == TTLConfig.NONE) TimeMode.None()
-        else TimeMode.ProcessingTime(),
-        OutputMode.Append())
 
   /** An ingested document: content fingerprint + identity. */
   case class IngestDoc(fp: String, docId: Long, ts: Long)
@@ -126,8 +90,8 @@ object StatefulOps {
     * lives in the RocksDB state store (wired session-wide in
     * [[graft.GraftSession]], proven live by RocksDbStateSpec) — hash-
     * partitioned by fingerprint across executors and bounded by executor
-    * disk, not heap; a TTL (timeout) bounds it further when the dedup
-    * horizon is a window rather than forever. */
+    * disk, not heap. No timeout is declared: the dedup horizon is
+    * forever, so the store holds every fingerprint ever seen. */
   def ingestDedup(ds: Dataset[IngestDoc]): Dataset[IngestDoc] =
     ds.groupByKey(_.fp)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
@@ -138,43 +102,6 @@ object StatefulOps {
             Iterator.single(docs.minBy(d => (d.ts, d.docId)))
           }
         })
-
-  /** [[ingestDedup]] re-expressed on Spark 4's `transformWithState`
-    * operator — the successor state API the engine is converging on
-    * (SPARK-46815): named state variables with per-state TTL, timers
-    * decoupled from output, and schema-evolvable state. Semantics are
-    * identical to the `flatMapGroupsWithState` form (one marker bit per
-    * fingerprint, first arrival by (ts, docId) wins); StreamingSpec pins
-    * the two bit-equal on the same input stream.
-    *
-    * Scale differences that matter at 100 TB of ingest: TTL here is
-    * DECLARED on the state (`TTLConfig`) and enforced by the store, not
-    * hand-rolled from timeout callbacks — the dedup horizon ("re-ingests
-    * within 30 days are dups, older re-crawls are fresh") becomes one
-    * line, and RocksDB compaction physically drops expired markers
-    * instead of the job carrying them forever. NONE here keeps parity
-    * with the exact-forever semantics of the original. */
-  class IngestDedupProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[String, IngestDoc, IngestDoc] {
-    @transient private var seen: ValueState[Boolean] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getValueState[Boolean]("seen", Encoders.scalaBoolean, ttl)
-    override def handleInputRows(key: String, rows: Iterator[IngestDoc],
-        timerValues: TimerValues): Iterator[IngestDoc] =
-      if (seen.exists()) Iterator.empty
-      else {
-        seen.update(true)
-        Iterator.single(rows.minBy(d => (d.ts, d.docId)))
-      }
-  }
-
-  def ingestDedupTws(ds: Dataset[IngestDoc],
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[IngestDoc] =
-    ds.groupByKey(_.fp)
-      .transformWithState(new IngestDedupProcessor(ttl),
-        if (ttl == TTLConfig.NONE) TimeMode.None()
-        else TimeMode.ProcessingTime(), // TTL state rejects NoTime
-        OutputMode.Append())
 
   /** A closed gap-session: [startS, endS] in event-time seconds. */
   case class SessionOut(key: String, startS: Long, endS: Long, nEvents: Long)
@@ -272,7 +199,7 @@ object StatefulOps {
     * cross-batch views would need watermark-buffered reordering, the
     * documented trade for O(1) state). Emitting the gap, not the matched
     * row id, keeps same-second view ties deterministic — identical to the
-    * batch operator, so StreamingSpec asserts batch ≡ streaming. */
+    * batch operator, so AsofSpec asserts batch ≡ streaming. */
   def asofAttribution(ds: Dataset[TaggedEvent]): Dataset[AsofMatch] =
     ds.groupByKey(_.userId)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
@@ -287,52 +214,6 @@ object StatefulOps {
           if (lastView != Long.MinValue) state.update(lastView)
           out.result().iterator
         })
-
-  /** [[asofAttribution]] on `transformWithState` — the as-of carry (ONE
-    * long per user: the latest view time) as a named ValueState, the
-    * minimal-state end of the streaming-asof spectrum on the successor
-    * API. Fold, total order ((t, side) — views before buys at the same
-    * second, the inclusive `>=` bound) and the cross-batch in-order
-    * assumption are identical to the fMGWS face; the named state gains
-    * an optional DECLARED TTL ("attribute only within N days of the last
-    * view" as one store-enforced config — the hand-rolled alternative is
-    * a timeout callback re-armed on every view). AsofSpec pins the twin
-    * bit-equal to [[asofAttribution]] on the same slicing. The
-    * out-of-order variant's twin is [[AsofBufferedProcessor]] — built
-    * only AFTER the r12 probe spec measured the tws late-row boundary
-    * (WatermarkBoundarySpec), per the CLAUDE.md boundary discipline. */
-  class AsofAttributionProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[Long, TaggedEvent, AsofMatch] {
-    @transient private var lastView: ValueState[Long] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      lastView = getHandle.getValueState[Long]("lastView",
-        Encoders.scalaLong, ttl)
-    override def handleInputRows(uid: Long, rows: Iterator[TaggedEvent],
-        tv: TimerValues): Iterator[AsofMatch] = {
-      var last =
-        if (lastView.exists()) lastView.get() else Long.MinValue
-      val out = Vector.newBuilder[AsofMatch]
-      rows.toSeq.sortBy(e => (e.t, e.side)).foreach { e =>
-        if (e.side == 0) last = math.max(last, e.t)
-        else if (last != Long.MinValue)
-          out += AsofMatch(e.eventId, uid, e.t, e.t - last)
-      }
-      if (last != Long.MinValue) lastView.update(last)
-      out.result().iterator
-    }
-  }
-
-  /** The `transformWithState` face of [[asofAttribution]]. A declared
-    * TTL forces `TimeMode.ProcessingTime()` like [[dailyDedupTws]] (the
-    * engine rejects TTL state under NoTime — the CLAUDE.md trap); NONE
-    * keeps exact parity with the fMGWS twin for the bit-equality spec. */
-  def asofAttributionTws(ds: Dataset[TaggedEvent],
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[AsofMatch] =
-    ds.groupByKey(_.userId)
-      .transformWithState(new AsofAttributionProcessor(ttl),
-        if (ttl == TTLConfig.NONE) TimeMode.None()
-        else TimeMode.ProcessingTime(),
-        OutputMode.Append())
 
   /** Buffer for the out-of-order as-of variant: the latest FINALIZED view
     * time plus the not-yet-finalized events above the watermark. */
@@ -389,78 +270,6 @@ object StatefulOps {
           out.result().iterator
         })
 
-  /** [[asofBuffered]] on `transformWithState` — the sorted-buffer as-of
-    * on the successor API, UNBLOCKED by measurement: the r12 probe
-    * (WatermarkBoundarySpec) pinned tws EventTime mode to the SAME
-    * inclusive `eventTime <= watermark` late-row pre-filter as fMGWS
-    * EventTimeTimeout, so the ripe/hold partition `t <= wmSec` carries
-    * over verbatim (the CLAUDE.md boundary discipline: measure, then
-    * build). State maps naturally: the finalized prefix collapses to a
-    * named ValueState long; the not-yet-final events live in a
-    * [[org.apache.spark.sql.streaming.ListState]] — the API's buffer
-    * primitive, appended/cleared without serializing a Seq into one
-    * value row like the fMGWS form must. The wake-up for quiescent keys
-    * is ONE re-armed event-time timer at the earliest held event's
-    * finalization point (strictly above the current watermark);
-    * `handleExpiredTimer` re-drains idempotently from the then-current
-    * watermark, so a timer racing newer arrivals in the same batch
-    * needs no guard. AsofSpec pins the twin's final output equal to
-    * [[asofBuffered]]'s on the same disordered slicing. */
-  class AsofBufferedProcessor
-      extends StatefulProcessor[Long, TaggedEvent, AsofMatch] {
-    @transient private var lastView: ValueState[Long] = _
-    @transient private var pending:
-      org.apache.spark.sql.streaming.ListState[TaggedEvent] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      lastView = getHandle.getValueState[Long]("lastView",
-        Encoders.scalaLong, TTLConfig.NONE)
-      pending = getHandle.getListState[TaggedEvent]("pending",
-        taggedEnc, TTLConfig.NONE)
-    }
-    private def drain(uid: Long, incoming: Seq[TaggedEvent],
-        wmMs: Long): Iterator[AsofMatch] = {
-      val wmSec = wmMs / 1000
-      val all = pending.get().toSeq ++ incoming
-      // measured boundary: rows at t == wmSec can no longer arrive
-      // (inclusive pre-filter), so finalizing the boundary second is
-      // safe AND required for liveness — the fMGWS twin's partition
-      val (ripe, hold) = all.partition(_.t <= wmSec)
-      var last = if (lastView.exists()) lastView.get() else Long.MinValue
-      val out = Vector.newBuilder[AsofMatch]
-      ripe.sortBy(e => (e.t, e.side)).foreach { e =>
-        if (e.side == 0) last = math.max(last, e.t)
-        else if (last != Long.MinValue)
-          out += AsofMatch(e.eventId, uid, e.t, e.t - last)
-      }
-      pending.clear()
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      if (hold.isEmpty && last == Long.MinValue) lastView.clear()
-      else {
-        if (last != Long.MinValue) lastView.update(last)
-        if (hold.nonEmpty) {
-          pending.put(hold.toArray)
-          // wake when the earliest held event finalizes (strictly above
-          // the current watermark so the timer is in the future)
-          getHandle.registerTimer(math.max(hold.map(_.t).min * 1000,
-            wmMs + 1))
-        }
-      }
-      out.result().iterator
-    }
-    override def handleInputRows(uid: Long, rows: Iterator[TaggedEvent],
-        tv: TimerValues): Iterator[AsofMatch] =
-      drain(uid, rows.toSeq, tv.getCurrentWatermarkInMs())
-    override def handleExpiredTimer(uid: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[AsofMatch] =
-      drain(uid, Nil, tv.getCurrentWatermarkInMs())
-  }
-
-  /** The `transformWithState` face of [[asofBuffered]]. */
-  def asofBufferedTws(ds: Dataset[TaggedEvent]): Dataset[AsofMatch] =
-    ds.groupByKey(_.userId)
-      .transformWithState(new AsofBufferedProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
-
   /** O9 — new/old visitor repair: `is_new=1` is rewritten to `0` when the
     * mid was first seen on an earlier date (BaseLogApp.java:71-108). State =
     * first-visit date. */
@@ -481,46 +290,6 @@ object StatefulOps {
           state.update(firstDate)
           out.iterator
         })
-
-  /** [[visitorRepair]] on Spark 4's `transformWithState` — completing the
-    * W8 migration row for the reference's first-visit ValueState job
-    * (BaseLogApp.java:71-108). Identical fold to the
-    * `flatMapGroupsWithState` form (first-seen date per mid, later "new"
-    * flags rewritten); the named state gains a DECLARED TTL so the
-    * reference's hand-tuned 1-day state retention becomes one config the
-    * store enforces (RocksDB compaction physically drops expired
-    * first-visit markers — at 100 TB of traffic the visitor-key space is
-    * the largest state surface this module holds). StreamingSpec pins the
-    * twin bit-equal to [[visitorRepair]] on the same slicing. */
-  class VisitorRepairProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[String, PageView, PageView] {
-    @transient private var first: ValueState[String] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      first = getHandle.getValueState[String]("firstDate", Encoders.STRING, ttl)
-    override def handleInputRows(mid: String, rows: Iterator[PageView],
-        tv: TimerValues): Iterator[PageView] = {
-      var firstDate = Option(first.get()).getOrElse("")
-      val out = rows.toSeq.sortBy(_.ts).map { e =>
-        if (firstDate.isEmpty) {
-          firstDate = e.date
-          e // genuinely new: keep is_new as sent
-        } else if (e.isNew == "1" && e.date != firstDate) {
-          e.copy(isNew = "0") // repeat visitor mis-flagged as new
-        } else e
-      }
-      first.update(firstDate)
-      out.iterator
-    }
-  }
-
-  /** The `transformWithState` face of [[visitorRepair]]. */
-  def visitorRepairTws(ds: Dataset[PageView],
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[PageView] =
-    ds.groupByKey(_.mid)
-      .transformWithState(new VisitorRepairProcessor(ttl),
-        if (ttl == TTLConfig.NONE) TimeMode.None()
-        else TimeMode.ProcessingTime(), // TTL state rejects NoTime
-        OutputMode.Append())
 
   /** O18 — keep-latest dedup on a changelog: hold the max-`opTs` row per
     * key, emit it once no newer version can arrive. The reference flushes
@@ -550,56 +319,6 @@ object StatefulOps {
             Iterator.empty
           }
         })
-
-  /** [[keepLatest]] on `transformWithState` with an EVENT-TIME TIMER —
-    * the upsert-kafka reader's core (the reference flushes the held
-    * version on a 5 s proc-time timer, DwsTradeSkuOrderWindow.java:81-111)
-    * on the successor API. The held max-`opTs` row lives in a named
-    * ValueState; each arrival re-arms ONE timer at
-    * `max(opTs + flushMs, watermark + 1)` (stale timers deleted — the
-    * [[GapSessionProcessor]] discipline), and `handleExpiredTimer` emits
-    * the version only if no newer one superseded it inside the same batch
-    * (expiry-vs-held guard). Event-time flush keeps the operator
-    * replay-deterministic, which the proc-time original is not.
-    * StreamingSpec pins the twin bit-equal to [[keepLatest]] on the same
-    * slicing. */
-  class KeepLatestProcessor(flushMs: Long)
-      extends StatefulProcessor[String, VersionedRow, VersionedRow] {
-    @transient private var held: ValueState[VersionedRow] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      held = getHandle.getValueState[VersionedRow]("held", versionedEnc,
-        TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[VersionedRow],
-        tv: TimerValues): Iterator[VersionedRow] = {
-      val candidates =
-        (if (held.exists()) Iterator.single(held.get()) else Iterator.empty) ++
-          rows
-      val latest = candidates.maxBy(_.opTs)
-      held.update(latest)
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(
-        math.max(latest.opTs + flushMs, tv.getCurrentWatermarkInMs() + 1))
-      Iterator.empty
-    }
-    override def handleExpiredTimer(key: String, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[VersionedRow] =
-      if (held.exists()) {
-        val h = held.get()
-        // a timer that raced a newer version in the same batch must not
-        // flush it early
-        if (info.getExpiryTimeInMs >= h.opTs + flushMs) {
-          held.clear()
-          Iterator.single(h)
-        } else Iterator.empty
-      } else Iterator.empty
-  }
-
-  /** The `transformWithState` face of [[keepLatest]]. */
-  def keepLatestTws(ds: Dataset[VersionedRow],
-      flushMs: Long = 5000): Dataset[VersionedRow] =
-    ds.groupByKey(_.key)
-      .transformWithState(new KeepLatestProcessor(flushMs),
-        TimeMode.EventTime(), OutputMode.Append())
 
   /** W6 — CEP bounce detector: an entry page (lastPageId == null) held per
     * mid; emitted as a bounce if the NEXT event is also an entry page, or
@@ -643,18 +362,20 @@ object StatefulOps {
           out.result().iterator
         })
 
-  /** [[bounceDetector]] on `transformWithState` — the event-time
-    * `handleExpiredTimer` showcase of the W8 migration (the reference's
-    * CEP pattern-timeout side output, DwdTrafficUserJumpDetail.java:89):
-    * BOTH arms of the Flink CEP pattern live on one code path, with the
+  /** [[bounceDetector]] on `transformWithState`, kept while the fMGWS
+    * form has the late-entry defect the module doc describes (the
+    * reference's CEP pattern-timeout side output,
+    * DwdTrafficUserJumpDetail.java:89): BOTH arms of the Flink CEP pattern live on one code path, with the
     * timeout arm now an explicit timer callback instead of a
     * `hasTimedOut` branch inside the input handler. An entry page is
     * held in named state with ONE armed timer at `ts + timeoutMs`; a
     * following entry page bounces it in-stream, a continuation clears
     * it, and watermark passage fires the timer for the no-follow-up
     * bounce — the expiry-vs-held guard drops a timer that raced a newer
-    * held entry in the same batch. StreamingSpec pins the twin bit-equal
-    * to [[bounceDetector]] on the same slicing. */
+    * held entry in the same batch, and a held entry whose timer is
+    * already behind the watermark bounces in that same batch instead of
+    * failing the query. StreamingSpec pins the two forms bit-equal on
+    * an in-order slicing. */
   class BounceProcessor(timeoutMs: Long)
       extends StatefulProcessor[String, PageView, PageView] {
     @transient private var held: ValueState[PageView] = _
@@ -741,44 +462,6 @@ object StatefulOps {
         })
   }
 
-  /** [[heavyHittersStream]] on `transformWithState` — the Misra–Gries
-    * buffer as a NAMED state variable. The fold is the SAME mergeable
-    * Aggregator algebra the batch query and the fMGWS face use
-    * (`Aggregators.misraGries`, property-tested under every partitioning
-    * by HeavyHitterSpec), so the MG guarantees — ≤ k entries, no false
-    * negative above n/k, undercount ≤ n/k — hold at every micro-batch
-    * boundary here too; the processor only changes WHERE the buffer
-    * lives (a named ValueState on the successor API, RocksDB-resident,
-    * O(k) per key forever). Emits the update-mode changelog
-    * (key, token, estimate) each batch, like the original.
-    * HeavyHitterSpec pins the twin's accumulated-prefix output bit-equal
-    * to [[heavyHittersStream]] under the same slicing. */
-  class HeavyHittersProcessor(k: Int)
-      extends StatefulProcessor[String, KeyedToken, (String, String, Long)] {
-    private val mg = graft.functions.Aggregators.misraGries(k)
-    @transient private var buf: ValueState[Map[String, Long]] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      buf = getHandle.getValueState[Map[String, Long]]("mg",
-        mg.bufferEncoder, TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[KeyedToken],
-        tv: TimerValues): Iterator[(String, String, Long)] = {
-      val folded = rows.foldLeft(Option(buf.get()).getOrElse(mg.zero))(
-        (b, r) => mg.reduce(b, r.token))
-      buf.update(folded)
-      folded.iterator.map { case (t, c) => (key, t, c) }
-    }
-  }
-
-  /** The `transformWithState` face of [[heavyHittersStream]]. */
-  def heavyHittersStreamTws(ds: Dataset[KeyedToken], k: Int)
-      : Dataset[(String, String, Long)] = {
-    implicit val outEnc: Encoder[(String, String, Long)] =
-      Encoders.product[(String, String, Long)]
-    ds.groupByKey(_.key)
-      .transformWithState(new HeavyHittersProcessor(k),
-        TimeMode.None(), OutputMode.Update())
-  }
-
   /** One event on the attribution stream (micros, id for the total
     * order; cents already exact). */
   case class TouchEvent(userId: Long, t: Long, eventId: Long,
@@ -809,45 +492,6 @@ object StatefulOps {
     * watermark-buffered sort). AttributionStreamSpec proves the streamed
     * emission equals an in-JVM replay of the batch semantics under
     * uneven slicing, with cross-batch state carries exercised. */
-  /** [[attributionStream]] on Spark 4's `transformWithState` — the twin
-    * discipline [[ingestDedupTws]] established: identical semantics on
-    * the successor state API, with the touch pair held in a NAMED
-    * ValueState and an optional TTL ("attribute only within N days of
-    * the last touch" becomes one declared config, enforced by the store,
-    * instead of hand-rolled timeout plumbing). AttributionStreamSpec
-    * pins the two faces bit-equal on the same slicing. */
-  class AttributionProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[Long, TouchEvent, AttributedPurchase] {
-    @transient private var touch: ValueState[TouchState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      touch = getHandle.getValueState[TouchState]("touch", tsEnc, ttl)
-    override def handleInputRows(uid: Long, rows: Iterator[TouchEvent],
-        timerValues: TimerValues): Iterator[AttributedPurchase] = {
-      var st = Option(touch.get()).getOrElse(TouchState(null, null))
-      val out = Vector.newBuilder[AttributedPurchase]
-      rows.toSeq.sortBy(e => (e.t, e.eventId)).foreach { e =>
-        if (e.eventType == "purchase")
-          out += AttributedPurchase(uid, e.t, e.eventId,
-            Option(st.first).getOrElse("direct"),
-            Option(st.last).getOrElse("direct"), e.cents)
-        else
-          st = TouchState(
-            if (st.first == null) e.eventType else st.first, e.eventType)
-      }
-      touch.update(st)
-      out.result().iterator
-    }
-  }
-
-  /** The `transformWithState` face of [[attributionStream]]. */
-  def attributionStreamTws(ds: Dataset[TouchEvent],
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[AttributedPurchase] =
-    ds.groupByKey(_.userId)
-      .transformWithState(new AttributionProcessor(ttl),
-        if (ttl == TTLConfig.NONE) TimeMode.None()
-        else TimeMode.ProcessingTime(), // TTL state rejects NoTime
-        OutputMode.Append())
-
   def attributionStream(ds: Dataset[TouchEvent])
       : Dataset[AttributedPurchase] =
     ds.groupByKey(_.userId)

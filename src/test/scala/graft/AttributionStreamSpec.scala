@@ -63,17 +63,6 @@ class AttributionStreamSpec extends AnyFunSuite {
 
     assert(got === expected)
 
-    // the transformWithState twin must be bit-equal on the same slicing
-    val in2 = MemoryStream[TouchEvent]
-    val q2 = attributionStreamTws(in2.toDS()).writeStream
-      .format("memory").queryName("attr_out_tws")
-      .outputMode(OutputMode.Append).start()
-    slices.foreach { s => in2.addData(s); q2.processAllAvailable() }
-    val gotTws = spark.table("attr_out_tws").as[AttributedPurchase]
-      .collect().toSet
-    q2.stop()
-    assert(gotTws === expected,
-      "transformWithState face diverged from the fMGWS face")
     // liveness: the cross-batch carry actually fired — some purchase in a
     // later slice was attributed to a touch that arrived in an EARLIER
     // slice (its own slice holds no prior touch for that user)

@@ -107,51 +107,4 @@ class HeavyHitterSpec extends AnyFunSuite {
     assert(latest.keySet === Set("a", "b"))
     assert(latest("a").contains("hotA") && latest("b").contains("hotB"))
   }
-
-  test("heavyHittersStreamTws (transformWithState) ≡ heavyHittersStream " +
-      "per micro-batch on the same slicing") {
-    import graft.streaming.StatefulOps
-    import graft.streaming.StatefulOps.KeyedToken
-    val spark = TestSession.spark
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val rnd = new scala.util.Random(59)
-    val k = 6
-    val stream = rnd.shuffle(
-      (1 to 250).map(_ => KeyedToken("a", s"t${rnd.nextInt(25)}")) ++
-      (1 to 180).map(_ => KeyedToken("a", "hotA")) ++
-      (1 to 200).map(_ => KeyedToken("b", s"u${rnd.nextInt(25)}")))
-    val slices = Seq(stream.slice(0, 7), stream.slice(7, 300),
-      stream.slice(300, 301), stream.slice(301, stream.length))
-    // both faces emit the update-mode changelog; capture it per batch so
-    // the comparison is batch-by-batch bit-equality, not just the final
-    // accumulated state
-    def run(f: org.apache.spark.sql.Dataset[KeyedToken] =>
-        org.apache.spark.sql.Dataset[(String, String, Long)])
-        : Seq[Set[(String, String, Long)]] = {
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[KeyedToken]
-      val perBatch = scala.collection.mutable.ArrayBuffer
-        .empty[Set[(String, String, Long)]]
-      val q = f(in.toDS()).toDF().writeStream.outputMode("update")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          perBatch += batch.collect()
-            .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-          ()
-        }.start()
-      slices.foreach { c => in.addData(c); q.processAllAvailable() }
-      q.stop()
-      // drop no-data batches (the engine may schedule them differently
-      // across operators); data batches stay aligned 1:1 with `slices`
-      perBatch.toSeq.filter(_.nonEmpty)
-    }
-    val legacy = run(ds => StatefulOps.heavyHittersStream(ds, k))
-    val tws = run(ds => StatefulOps.heavyHittersStreamTws(ds, k))
-    assert(tws.size === legacy.size)
-    tws.zip(legacy).zipWithIndex.foreach { case ((t, l), i) =>
-      assert(t === l, s"batch $i diverged")
-    }
-    // liveness: the sketch really tracked the hot token on the tws face
-    assert(tws.last.exists(r => r._1 == "a" && r._2 == "hotA"))
-  }
 }

@@ -36,10 +36,14 @@ class StreamingSpec extends AnyFunSuite {
       KeyedEvent("u2", 1500, "2024-01-01")))
   }
 
-  test("dailyDedupTws (transformWithState) ≡ dailyDedup on the same " +
-      "slicing, incl. midnight rollover and cross-batch same-day dups") {
+  test("dailyDedup on a 3-batch slicing: midnight rollover and cross-batch " +
+      "same-day dups") {
     implicit val sqlCtx = spark.sqlContext
-    val batches = Seq(
+    val in = MemoryStream[KeyedEvent]
+    val q = dailyDedup(in.toDS()).writeStream
+      .format("memory").queryName("dd_slices").outputMode(OutputMode.Append)
+      .start()
+    Seq(
       Seq(KeyedEvent("u1", 1000, "2024-01-01"),
         KeyedEvent("u1", 2000, "2024-01-01"), // same batch, same day: drop
         KeyedEvent("u2", 1500, "2024-01-01")),
@@ -49,29 +53,20 @@ class StreamingSpec extends AnyFunSuite {
       Seq(KeyedEvent("u1", 90000000, "2024-01-02"),
         KeyedEvent("u1", 90000001, "2024-01-02"),
         KeyedEvent("u2", 90000500, "2024-01-02")))
-    def run(name: String,
-        f: org.apache.spark.sql.Dataset[KeyedEvent] =>
-          org.apache.spark.sql.Dataset[KeyedEvent]): Seq[KeyedEvent] = {
-      val in = MemoryStream[KeyedEvent]
-      val q = f(in.toDS()).writeStream
-        .format("memory").queryName(name).outputMode(OutputMode.Append)
-        .start()
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      val rows = spark.table(name).as[KeyedEvent].collect()
-        .sortBy(e => (e.key, e.ts)).toSeq
-      q.stop()
-      rows
-    }
-    val legacy = run("dd_legacy", dailyDedup)
-    val tws = run("dd_tws", ds => dailyDedupTws(ds))
-    assert(tws === legacy)
-    // liveness: the rollover re-emitted, the dups were really dropped
-    assert(tws.count(_.key == "u1") === 2, s"$tws")
-    assert(tws.map(e => (e.key, e.date)).distinct.size === tws.size)
+      .foreach { b => in.addData(b); q.processAllAvailable() }
+    val rows = spark.table("dd_slices").as[KeyedEvent].collect()
+      .sortBy(e => (e.key, e.ts))
+    q.stop()
+    assert(rows.toSeq === Seq(
+      KeyedEvent("u1", 1000, "2024-01-01"),
+      KeyedEvent("u1", 90000000, "2024-01-02"),
+      KeyedEvent("u2", 1500, "2024-01-01"),
+      KeyedEvent("u2", 90000500, "2024-01-02"),
+      KeyedEvent("u3", 4000, "2024-01-01")))
   }
 
-  test("dailyDedupTws emits one row per (key, date) under random batching " +
-      "(midnight-rollover property)") {
+  test("dailyDedup emits the first row per (key, date) under random " +
+      "batching (midnight-rollover property)") {
     implicit val sqlCtx = spark.sqlContext
     val rnd = new scala.util.Random(17)
     val days = Seq("2024-01-01", "2024-01-02", "2024-01-03")
@@ -80,8 +75,8 @@ class StreamingSpec extends AnyFunSuite {
     } yield KeyedEvent(s"u$k", di * 86400000L + i * 1000L, d))
       .sortBy(_.ts) // per-key event-time order is the operator contract
     val in = MemoryStream[KeyedEvent]
-    val q = dailyDedupTws(in.toDS()).writeStream
-      .format("memory").queryName("dd_tws_prop")
+    val q = dailyDedup(in.toDS()).writeStream
+      .format("memory").queryName("dd_prop")
       .outputMode(OutputMode.Append).start()
     var i = 0
     while (i < events.length) {
@@ -90,7 +85,7 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       i += n
     }
-    val rows = spark.table("dd_tws_prop").as[KeyedEvent].collect()
+    val rows = spark.table("dd_prop").as[KeyedEvent].collect()
     q.stop()
     assert(rows.length === 15, s"expected 5 keys x 3 days, got ${rows.length}")
     assert(rows.map(e => (e.key, e.date)).toSet.size === 15)
@@ -98,44 +93,6 @@ class StreamingSpec extends AnyFunSuite {
     val firsts = events.groupBy(e => (e.key, e.date))
       .map { case (_, g) => g.minBy(_.ts) }.toSet
     assert(rows.toSet === firsts)
-  }
-
-  test("dailyDedupTws with a DECLARED TTL (proc-time mode) runs the same " +
-      "dedup — the declared-horizon config path is live") {
-    // TTL forces TimeMode.ProcessingTime, where the engine keeps scheduling
-    // maintenance batches — even AvailableNow does not terminate within
-    // 60 s (measured r13). The honest contract is the SINK: poll (bounded)
-    // until the expected rows land, assert, then stop() EXPLICITLY — an
-    // un-stopped TTL stream races session teardown and leaves an
-    // [INTERNAL_ERROR] planning stack in a green log (VERDICT r13 #5).
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[KeyedEvent]
-    in.addData(
-      KeyedEvent("u1", 1000, "2024-01-01"),
-      KeyedEvent("u1", 2000, "2024-01-01"),
-      KeyedEvent("u2", 1500, "2024-01-01"),
-      KeyedEvent("u1", 90000000, "2024-01-02"))
-    val q = dailyDedupTws(in.toDS(),
-        org.apache.spark.sql.streaming.TTLConfig(
-          java.time.Duration.ofDays(30))).writeStream
-      .format("memory").queryName("dd_tws_ttl")
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    val expect = Seq(
-      KeyedEvent("u1", 1000, "2024-01-01"),
-      KeyedEvent("u1", 90000000, "2024-01-02"),
-      KeyedEvent("u2", 1500, "2024-01-01"))
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    def sink() = spark.table("dd_tws_ttl").as[KeyedEvent].collect()
-      .sortBy(e => (e.key, e.ts)).toSeq
-    var rows = sink()
-    while (rows != expect && System.nanoTime() < deadline) {
-      Thread.sleep(500); rows = sink()
-    }
-    q.stop()
-    assert(rows === expect,
-      "dd_tws_ttl sink never reached the expected rows within 60s")
   }
 
   test("sessionizeTws closes by gap in-stream and by event-time timer at the end") {
@@ -178,70 +135,6 @@ class StreamingSpec extends AnyFunSuite {
       SessionOut("u1", 200, 200, 1)), s"final sessions: $fin")
   }
 
-  test("ingestDedupTws (transformWithState) ≡ ingestDedup on the same stream") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[IngestDoc]
-    val q = ingestDedupTws(in.toDS()).writeStream
-      .format("memory").queryName("ingest_tws").outputMode(OutputMode.Append)
-      .start()
-    in.addData(
-      IngestDoc("fpA", 11L, 1000),
-      IngestDoc("fpA", 10L, 1000), // same batch, same ts: docId breaks tie
-      IngestDoc("fpB", 20L, 1500))
-    q.processAllAvailable()
-    in.addData(
-      IngestDoc("fpA", 30L, 2000), // later batch duplicate: dropped
-      IngestDoc("fpC", 40L, 2500))
-    q.processAllAvailable()
-    val rows = spark.table("ingest_tws").as[IngestDoc].collect().sortBy(_.fp)
-    q.stop()
-    // identical expectation as the flatMapGroupsWithState test below —
-    // the new-API operator must be a drop-in replacement
-    assert(rows.toSeq === Seq(
-      IngestDoc("fpA", 10L, 1000),
-      IngestDoc("fpB", 20L, 1500),
-      IngestDoc("fpC", 40L, 2500)))
-  }
-
-  test("ingestDedupTws with a declared TTL runs under ProcessingTime and " +
-      "matches the NONE behavior within the horizon") {
-    // the TTL branch flips TimeMode to ProcessingTime (the engine throws
-    // for TTL state under NoTime) — poll-the-sink, never awaitTermination,
-    // the CLAUDE.md discipline for proc-time TTL paths (a declared TTL
-    // keeps even AvailableNow alive past 60 s; measured r13)
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[IngestDoc]
-    in.addData(
-      IngestDoc("fpA", 11L, 1000), IngestDoc("fpA", 10L, 1000),
-      IngestDoc("fpB", 20L, 1500), IngestDoc("fpA", 30L, 2000))
-    val q = ingestDedupTws(in.toDS(),
-        org.apache.spark.sql.streaming.TTLConfig(
-          java.time.Duration.ofDays(30))).writeStream
-      .format("memory").queryName("ingest_tws_ttl")
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    // The r12 ADVICE fix (assert awaitTermination's boolean) EXPOSED a
-    // deeper measured behavior: with a declared TTL the proc-time
-    // maintenance batches keep even an AvailableNow query alive past
-    // 60 s — the old green run was ignoring non-termination and reading
-    // a luckily-complete table. The honest contract is the SINK: poll
-    // (bounded) until the expected rows land, assert, then stop() —
-    // a hang still fails loudly, as the poll deadline.
-    val expect = Seq(
-      IngestDoc("fpA", 10L, 1000), IngestDoc("fpB", 20L, 1500))
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    def sink() = spark.table("ingest_tws_ttl").as[IngestDoc]
-      .collect().sortBy(_.fp).toSeq
-    var rows = sink()
-    while (rows != expect && System.nanoTime() < deadline) {
-      Thread.sleep(500); rows = sink()
-    }
-    q.stop()
-    assert(rows === expect,
-      "ingest_tws_ttl sink never reached the expected rows within 60s")
-  }
-
   test("ingestDedup emits exactly the first doc per fingerprint across batches") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[IngestDoc]
@@ -277,6 +170,34 @@ class StreamingSpec extends AnyFunSuite {
     val rows = spark.table("vr").as[PageView].collect().sortBy(_.ts)
     q.stop()
     assert(rows.map(_.isNew).toSeq === Seq("1", "0"))
+  }
+
+  test("visitorRepair on a 3-batch multi-mid slicing") {
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[PageView]
+    val q = visitorRepair(in.toDS()).writeStream
+      .format("memory").queryName("vr_slices").outputMode(OutputMode.Append)
+      .start()
+    Seq(
+      Seq(PageView("m1", "home", null, "1", 1000, "2024-01-01"),
+        PageView("m2", "home", null, "1", 1500, "2024-01-01")),
+      Seq(PageView("m1", "home", null, "1", 90000000, "2024-01-02"),
+        PageView("m1", "detail", "home", "0", 90000100, "2024-01-02"),
+        PageView("m3", "home", null, "1", 90000200, "2024-01-02")),
+      Seq(PageView("m2", "home", null, "1", 180000000, "2024-01-03")))
+      .foreach { b => in.addData(b); q.processAllAvailable() }
+    val rows = spark.table("vr_slices").as[PageView].collect()
+      .sortBy(e => (e.mid, e.ts)).toSeq
+    q.stop()
+    // a later-day "1" is rewritten only for a mid first seen earlier,
+    // across batches; first visits (m3 on day two) keep the flag as sent
+    assert(rows === Seq(
+      PageView("m1", "home", null, "1", 1000, "2024-01-01"),
+      PageView("m1", "home", null, "0", 90000000, "2024-01-02"),
+      PageView("m1", "detail", "home", "0", 90000100, "2024-01-02"),
+      PageView("m2", "home", null, "1", 1500, "2024-01-01"),
+      PageView("m2", "home", null, "0", 180000000, "2024-01-03"),
+      PageView("m3", "home", null, "1", 90000200, "2024-01-02")))
   }
 
   test("bounceDetector: entry→entry bounces, entry→page does not, timeout bounces") {
@@ -334,71 +255,31 @@ class StreamingSpec extends AnyFunSuite {
     assert(!rows.exists(r => r.key == "k1" && r.payload != "v5"))
   }
 
-  test("visitorRepairTws (transformWithState) ≡ visitorRepair on the same slicing") {
+  test("keepLatest flushes exactly one latest row per key on a 4-batch " +
+      "slicing") {
     implicit val sqlCtx = spark.sqlContext
-    val batches = Seq(
-      Seq(PageView("m1", "home", null, "1", 1000, "2024-01-01"),
-        PageView("m2", "home", null, "1", 1500, "2024-01-01")),
-      Seq(PageView("m1", "home", null, "1", 90000000, "2024-01-02"),
-        PageView("m1", "detail", "home", "0", 90000100, "2024-01-02"),
-        PageView("m3", "home", null, "1", 90000200, "2024-01-02")),
-      Seq(PageView("m2", "home", null, "1", 180000000, "2024-01-03")))
-    def run(name: String,
-        f: org.apache.spark.sql.Dataset[PageView] =>
-          org.apache.spark.sql.Dataset[PageView]): Seq[PageView] = {
-      val in = MemoryStream[PageView]
-      val q = f(in.toDS()).writeStream
-        .format("memory").queryName(name).outputMode(OutputMode.Append)
-        .start()
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      val rows = spark.table(name).as[PageView].collect()
-        .sortBy(e => (e.mid, e.ts)).toSeq
-      q.stop()
-      rows
-    }
-    val legacy = run("vr_legacy", visitorRepair)
-    val tws = run("vr_tws", ds => visitorRepairTws(ds))
-    assert(tws === legacy)
-    // and the repair itself happened (not two empty outputs agreeing):
-    // both later-day "1" flags were rewritten
-    assert(tws.exists(e => e.mid == "m1" && e.ts == 90000000L &&
-      e.isNew == "0"), s"$tws")
-    assert(tws.exists(e => e.mid == "m2" && e.ts == 180000000L &&
-      e.isNew == "0"), s"$tws")
-  }
-
-  test("keepLatestTws (transformWithState timer) ≡ keepLatest on the same slicing") {
-    implicit val sqlCtx = spark.sqlContext
-    val batches = Seq(
+    val in = MemoryStream[VersionedRow]
+    val withWm = in.toDS().toDF()
+      .withColumn("eventTime", timestamp_millis(col("opTs")))
+      .withWatermark("eventTime", "0 seconds")
+      .as[VersionedRow]
+    val q = keepLatest(withWm).writeStream
+      .format("memory").queryName("kl_slices").outputMode(OutputMode.Append)
+      .start()
+    Seq(
       Seq(VersionedRow("k1", 1000, "v1"), VersionedRow("k1", 5000, "v5"),
         VersionedRow("k1", 3000, "v3")),
       Seq(VersionedRow("k2", 60000, "x")), // watermark → 60000 > 5000+5000
-      Seq(VersionedRow("k3", 120000, "y")))
-    def run(name: String,
-        f: org.apache.spark.sql.Dataset[VersionedRow] =>
-          org.apache.spark.sql.Dataset[VersionedRow]): Seq[VersionedRow] = {
-      val in = MemoryStream[VersionedRow]
-      val withWm = in.toDS().toDF()
-        .withColumn("eventTime", timestamp_millis(col("opTs")))
-        .withWatermark("eventTime", "0 seconds")
-        .as[VersionedRow]
-      val q = f(withWm).writeStream
-        .format("memory").queryName(name).outputMode(OutputMode.Append)
-        .start()
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      in.addData(VersionedRow("k4", 240000, "z")) // extra batch: timers fire
-      q.processAllAvailable()
-      val rows = spark.table(name).as[VersionedRow].collect()
-        .sortBy(e => (e.key, e.opTs)).toSeq
-      q.stop()
-      rows
-    }
-    val legacy = run("kl_legacy", ds => keepLatest(ds))
-    val tws = run("kl_tws", ds => keepLatestTws(ds))
-    assert(tws === legacy)
-    // the latest k1 version flushed, superseded ones never emitted
-    assert(tws.exists(r => r.key == "k1" && r.payload == "v5"), s"$tws")
-    assert(!tws.exists(r => r.key == "k1" && r.payload != "v5"), s"$tws")
+      Seq(VersionedRow("k3", 120000, "y")),
+      Seq(VersionedRow("k4", 240000, "z"))) // flushes k3; k4 stays held
+      .foreach { b => in.addData(b); q.processAllAvailable() }
+    val rows = spark.table("kl_slices").as[VersionedRow].collect()
+      .sortBy(e => (e.key, e.opTs)).toSeq
+    q.stop()
+    assert(rows === Seq(
+      VersionedRow("k1", 5000, "v5"),
+      VersionedRow("k2", 60000, "x"),
+      VersionedRow("k3", 120000, "y")))
   }
 
   test("bounceDetectorTws (handleExpiredTimer) ≡ bounceDetector on the same slicing") {
